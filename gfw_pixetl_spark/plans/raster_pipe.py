@@ -20,6 +20,21 @@ task's Arrow batch stays far below the 2 GB limit regardless of tile size
 The file catalog is broadcast (it is tiny relative to pixel data), making
 the spatial prune map-only. AQE handles skew when some tiles intersect
 many more files than others.
+
+Partitioning. The kernel's window rows and the writer's payloads are
+exchanged with an explicit partition count (``defaultParallelism``).
+Their cost is Python time per row, not shuffle bytes, so AQE would
+coalesce the few-KB exchanges into one partition and run the whole
+kernel, and every tile write, in a single task. AQE leaves an exchange
+with a given partition count alone, and the writer's hash partitioning
+on ``tile_id`` already satisfies its ``groupBy``.
+
+The sink is evaluated once per action: the status DataFrame reads the
+writer's output through a single reference (a left join from the pruned
+tiles), so no second copy of the writer feeds the "skipped" accounting.
+Each further action on the status DataFrame re-runs the whole pipeline,
+rewriting every tile; a caller that runs more than one action on it
+caches it first, as ``cli.py`` and ``RasterPipe.publish`` do.
 """
 
 from __future__ import annotations
@@ -221,6 +236,11 @@ def write_tiles(
     ``sources/geotiff.py``); shared by the raster and vector pipes.
     groupBy(tile_id) + applyInPandas = the single-writer-per-tile
     invariant; windowed assembly keeps peak memory at one tile per task.
+    The payloads are hash-partitioned on tile_id into
+    ``defaultParallelism`` partitions first: a tile write costs Python
+    time, not shuffle bytes, and an explicit count keeps AQE from
+    coalescing all tiles into one writer task (the groupBy then needs no
+    second exchange).
     The profile mirrors ``gfw_pixetl/tiles/tile.py:54-97`` (tiled layout,
     block size, compression, CRS, nodata, photometric, NBITS) and the
     write is atomic (tmp + rename), matching the reference's
@@ -322,7 +342,12 @@ def write_tiles(
             columns=["tile_id", "status", "n_windows", "out_path"],
         )
 
-    return payloads.groupBy("tile_id").applyInPandas(writer, STATUS_SCHEMA)
+    n = payloads.sparkSession.sparkContext.defaultParallelism
+    return (
+        payloads.repartition(n, "tile_id")
+        .groupBy("tile_id")
+        .applyInPandas(writer, STATUS_SCHEMA)
+    )
 
 
 @dataclass
@@ -350,7 +375,9 @@ class RasterPipe:
 
         Arrow moves each batch once; all math is NumPy over whole windows
         (the reference's vectorization, preserved). Empty windows (F8) are
-        dropped here so they never shuffle.
+        dropped here so they never shuffle. The window rows are spread
+        round-robin over ``defaultParallelism`` partitions so the kernel
+        runs on every core (see the module docstring).
         """
         layer = self.layer
         reader = self.reader
@@ -416,7 +443,8 @@ class RasterPipe:
                     ))
                 yield pd.DataFrame(out, columns=WINDOW_PAYLOAD_COLS)
 
-        return windows.mapInPandas(kernel, WINDOW_PAYLOAD_SCHEMA)
+        n = windows.sparkSession.sparkContext.defaultParallelism
+        return windows.repartition(n).mapInPandas(kernel, WINDOW_PAYLOAD_SCHEMA)
 
     def write_tiles(self, payloads: DataFrame) -> DataFrame:
         return write_tiles(payloads, self.layer, self.grid_obj, self.work_dir)
@@ -434,7 +462,9 @@ class RasterPipe:
         Statuses mirror ``pipes/pipe.py:137-162``: processed / skipped
         (no data / subset) / existing. ``existing`` takes a tile_id
         DataFrame directly (e.g. ``object_store.existing_tiles``);
-        ``existing_tile_ids`` is the list-literal convenience.
+        ``existing_tile_ids`` is the list-literal convenience. Every
+        action on the result re-runs the sink and rewrites its tiles, so
+        a caller that runs more than one caches it first (``cli.py``).
         """
         grid = self.grid_obj
         tiles = seed_tiles(spark, grid)
@@ -448,16 +478,15 @@ class RasterPipe:
         windows = plan_windows(withf, grid, self.blocks_per_window)
         payloads = self.transform_windows(windows)
         statuses = self.write_tiles(payloads)
-        # F9: tiles that survived pruning but produced no data windows
-        skipped = (
-            pruned.select("tile_id")
-            .join(statuses.select("tile_id"), "tile_id", "left_anti")
-            .select(
-                "tile_id", F.lit("skipped (has no data)").alias("status"),
-                F.lit(0).alias("n_windows"), F.lit(None).cast("string").alias("out_path"),
-            )
+        # F9: tiles that survived pruning but produced no data windows get
+        # no writer row; the left join fills them in from the one
+        # reference to the writer's output
+        return pruned.select("tile_id").join(statuses, "tile_id", "left").select(
+            "tile_id",
+            F.coalesce("status", F.lit("skipped (has no data)")).alias("status"),
+            F.coalesce("n_windows", F.lit(0)).alias("n_windows"),
+            "out_path",
         )
-        return statuses.unionByName(skipped)
 
     def publish(
         self,
@@ -474,12 +503,26 @@ class RasterPipe:
         (``sources/object_store.py::upload_exactly_once``). Returns the
         commit receipt {version, fresh, n_uploads}; a whole-job re-run
         returns the SAME version with fresh=False instead of
-        double-counting tiles."""
+        double-counting tiles.
+
+        The manifest and the upload run four actions over ``statuses``;
+        an uncached status DataFrame is persisted for the call so the
+        sink writes each tile once, and unpersisted afterwards. A caller's
+        own cache is left as it is."""
+        from pyspark import StorageLevel
+
         from ..sources.object_store import upload_exactly_once
 
-        man = manifest(statuses, seed_tiles(spark, self.grid_obj))
-        return upload_exactly_once(
-            statuses, man, cfg, bucket, prefix, job_id=job_id)
+        owned = statuses.storageLevel == StorageLevel.NONE
+        if owned:
+            statuses = statuses.persist()
+        try:
+            man = manifest(statuses, seed_tiles(spark, self.grid_obj))
+            return upload_exactly_once(
+                statuses, man, cfg, bucket, prefix, job_id=job_id)
+        finally:
+            if owned:
+                statuses.unpersist()
 
 
 def manifest(statuses: DataFrame, tiles: DataFrame) -> dict:

@@ -44,8 +44,10 @@ def get_spark(
 
     ``shuffle_partitions`` defaults to the parallelism of the master; on a
     real cluster you would size it to ~2-3x total cores and let AQE coalesce.
+    ``local[N]`` takes N from ``SPARK_GRAFT_CPUS`` and falls back to the
+    machine's core count.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)

@@ -28,3 +28,24 @@ def test_plan_is_clean(name, spark):
     exempt = EXEMPTIONS.get(name, {})
     bad = {rule: msg for rule, msg in flags.items() if rule not in exempt}
     assert not bad, f"{name}: {bad} (add a justified exemption or fix the plan)"
+
+
+def test_dup_sink_flags_a_second_writer(spark, tmp_path):
+    """DUP_SINK fires when the tile writer's UDF is planned twice (each
+    copy rewrites every tile) and stays quiet on RasterPipe.run."""
+    from gfw_pixetl_spark.grids import LatLngGrid
+    from tests.test_raster_pipe import make_pipe
+
+    grid = LatLngGrid(10, 160)
+    files = [{"uri": "m://a", "band": 1,
+              "left": 0.0, "bottom": 0.0, "right": 10.0, "top": 10.0}]
+    status = make_pipe(tmp_path, grid).run(spark, files, subset=["10N_000E"])
+
+    def flags(df):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        return lint_plan("adhoc", buf.getvalue())
+
+    assert "DUP_SINK" not in flags(status)
+    assert "DUP_SINK" in flags(status.unionByName(status))

@@ -248,3 +248,51 @@ def test_first_last_event_is_one_aggregate(spark):
     plan = plan_of(harness.QUERIES["q116_first_last_event"](spark, SF_SMOKE))
     assert "Window" not in plan
     assert "Join" not in plan
+
+
+def _exchange_below(lines: list[str], marker: str) -> list[str]:
+    """The executed-plan lines from the node containing ``marker`` down
+    to the first exchange under it (both ends included). The kernel and
+    the writer are unary, so this is their input chain."""
+    start = next(i for i, line in enumerate(lines) if marker in line)
+    end = next(i for i in range(start + 1, len(lines))
+               if "Exchange " in lines[i])
+    return lines[start:end + 1]
+
+
+def test_raster_sink_runs_once_on_every_core(spark, tmp_path):
+    """RasterPipe's executed plan: the writer (FlatMapGroupsInPandas) is
+    there once, so each tile is written once per action; the window
+    kernel and the writer read exchanges with an explicit partition
+    count, never a coalesced single-partition read (their cost is Python
+    time per row, which AQE's byte-based coalescing cannot see)."""
+    from gfw_pixetl_spark.grids import LatLngGrid
+    from tests.test_raster_pipe import make_pipe
+
+    grid = LatLngGrid(10, 160)
+    pipe = make_pipe(tmp_path, grid)
+    files = [{"uri": "m://a", "band": 1,
+              "left": 0.0, "bottom": -10.0, "right": 20.0, "top": 10.0}]
+    status = pipe.run(spark, files, subset=[
+        "00N_000E", "10N_000E", "00N_010E", "10N_010E"])
+    rows = status.collect()
+    assert len(rows) == 4 and {r.status for r in rows} == {"processed"}
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        status.explain()
+    plan = buf.getvalue()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    assert sum("FlatMapGroupsInPandas" in line for line in final) == 1
+
+    n = spark.sparkContext.defaultParallelism
+    assert n > 1
+    kernel = _exchange_below(final, "MapInPandas kernel(")
+    writer = _exchange_below(final, "FlatMapGroupsInPandas")
+    for chain in (kernel, writer):
+        assert not any("AQEShuffleRead" in line for line in chain), chain
+        assert "REPARTITION_BY_NUM" in chain[-1], chain[-1]
+    assert f"RoundRobinPartitioning({n})" in kernel[-1]
+    assert "hashpartitioning(tile_id#" in writer[-1]
+    assert f", {n}), REPARTITION_BY_NUM" in writer[-1]

@@ -86,6 +86,57 @@ def test_pipe_skips_existing(spark, tmp_path):
     assert status.collect() == []  # incremental skip removed the only tile
 
 
+class PatchyReader(SyntheticReader):
+    """Fails west of Greenwich, reads nothing but nodata south of the
+    equator, and reads the synthetic source elsewhere."""
+
+    def __call__(self, uris, bounds, shape, band_count):
+        if bounds[0] < 0:
+            raise IOError("synthetic read failure")
+        if bounds[3] <= 0:
+            return np.ma.masked_all((band_count, *shape), dtype="int64")
+        return super().__call__(uris, bounds, shape, band_count)
+
+
+def test_status_accounting(spark, tmp_path):
+    """One run covers every status the sink accounts for: a pruned tile
+    whose windows are all empty is skipped with no windows and no path,
+    an existing tile is absent, a tile with a failing window is failed,
+    and every pruned tile has exactly one status row."""
+    grid = LatLngGrid(10, 544)  # 2x2 windows per tile
+    pipe = rp.RasterPipe(
+        layer=make_layer(),
+        reader=PatchyReader(xres=grid.xres, yres=grid.yres),
+        work_dir=str(tmp_path),
+        grid=grid,
+    )
+    files = [{"uri": "m://a", "band": 1,
+              "left": -10.0, "bottom": -10.0, "right": 10.0, "top": 20.0}]
+    status = pipe.run(
+        spark, files,
+        subset=["10N_000E", "10N_010W", "00N_000E", "20N_000E"],
+        existing_tile_ids=["20N_000E"],
+    )
+    rows = status.collect()
+    assert sorted(r.tile_id for r in rows) == [
+        "00N_000E", "10N_000E", "10N_010W"]
+    by_id = {r.tile_id: r for r in rows}
+
+    done = by_id["10N_000E"]
+    assert done.status == "processed" and done.n_windows == 4
+    data, _ = read_tile(done.out_path)
+    np.testing.assert_array_equal(
+        data, expected_tile(grid.get_tile_bounds("10N_000E"), grid))
+
+    empty = by_id["00N_000E"]
+    assert empty.status == "skipped (has no data)"
+    assert empty.n_windows == 0 and empty.out_path is None
+
+    bad = by_id["10N_010W"]
+    assert bad.status.startswith("failed - OSError")
+    assert bad.out_path is None
+
+
 def test_multiband_calc(spark, tmp_path):
     grid = LatLngGrid(10, 160)
     pipe = make_pipe(

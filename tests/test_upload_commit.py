@@ -171,3 +171,38 @@ def test_pipe_publish_end_to_end(spark, job, s3cfg):
     conv = json.loads(s3cfg.client().get_object(
         Bucket=BUCKET, Key="publish/prefix/tiles.geojson")["Body"].read())
     assert len(conv["features"]) == 2
+
+
+def test_publish_writes_each_tile_once(spark, s3cfg, tmp_path, monkeypatch):
+    """publish runs four actions over the status DataFrame (two manifest
+    collects, the failed-tile probe, the upload collect). Over an
+    uncached one each action would re-run the sink and rewrite every
+    COG; publish persists it for the call, so the COGs keep the mtimes
+    they had when the manifest's actions finished, and the cache is
+    released afterwards."""
+    from pyspark import StorageLevel
+
+    grid = LatLngGrid(10, 160)
+    pipe = make_pipe(tmp_path, grid)
+    files = [{"uri": "memory://a", "band": 1,
+              "left": 0.0, "bottom": -10.0, "right": 10.0, "top": 10.0}]
+    status = pipe.run(spark, files, subset=["00N_000E", "10N_000E"])
+
+    def cog_mtimes():
+        return {p: p.stat().st_mtime_ns for p in tmp_path.rglob("*.tif")}
+
+    after_manifest = {}
+    real_manifest = rp.manifest
+
+    def manifest_then_stat(statuses, tiles):
+        out = real_manifest(statuses, tiles)
+        after_manifest.update(cog_mtimes())
+        return out
+
+    monkeypatch.setattr(rp, "manifest", manifest_then_stat)
+    out = pipe.publish(spark, status, s3cfg, BUCKET, "once/prefix",
+                       job_id="once-1")
+    assert out["n_uploads"] == 2
+    assert len(after_manifest) == 2
+    assert cog_mtimes() == after_manifest
+    assert status.storageLevel == StorageLevel.NONE

@@ -11,6 +11,10 @@ a documented design decision, not a silence):
 * SINGLE_PART — `Exchange SinglePartition` feeding real work: a global
                 window/sort funneling fact-scale rows through one task.
                 Legitimate on dimension-sized inputs only.
+* DUP_SINK    — the tile writer's Python UDF (one expression id) planned
+                more than once: every copy rewrites every tile. The
+                writer is the grouped-map node that emits the sink's
+                status row (``raster_pipe.STATUS_SCHEMA``).
 
 Usage: python tools/plan_lint.py [sf_dir]     (default sf0.001)
 Exit code 1 if any non-exempt flag fires; used by tests/test_plan_lint.
@@ -114,6 +118,9 @@ EXEMPTIONS: dict[str, dict[str, str]] = {
 
 
 import re
+from collections import Counter
+
+from gfw_pixetl_spark.plans.raster_pipe import STATUS_SCHEMA
 
 _TREE_NODE = re.compile(r"^([ +:|-]*)\*?\(?\d*\)?\s*([A-Za-z]+[A-Za-z ]*)\((\d+)\)")
 
@@ -149,6 +156,28 @@ def _single_partition_consumers(plan: str) -> list[str]:
     return consumers
 
 
+_SINK_COLS = [c.split()[0] for c in STATUS_SCHEMA.split(",")]
+# name(args)#id of a Python UDF expression; args may hold one paren level
+_PY_UDF = re.compile(r"(\w+)\((?:[^()]|\([^()]*\))*\)#(\d+)")
+
+
+def _sink_udfs(plan: str) -> list[str]:
+    """``name#id`` of the tile writer's UDF, once per plan node running
+    it: the formatted plan's FlatMapGroupsInPandas detail blocks whose
+    output columns are the sink's status row."""
+    found = []
+    for block in plan.split("\n\n"):
+        block = block.strip()
+        args = re.search(r"^Arguments: (.*)$", block, re.M)
+        if not (args and re.match(r"\(\d+\) FlatMapGroupsInPandas\n", block)):
+            continue
+        out = args.group(1).rpartition("[")[2].rstrip("] ").split(", ")
+        udf = _PY_UDF.search(args.group(1))
+        if udf and [c.split("#")[0] for c in out] == _SINK_COLS:
+            found.append(f"{udf.group(1)}#{udf.group(2)}")
+    return found
+
+
 def lint_plan(name: str, plan: str) -> dict[str, str]:
     flags: dict[str, str] = {}
     if "CartesianProduct" in plan:
@@ -169,6 +198,9 @@ def lint_plan(name: str, plan: str) -> dict[str, str]:
         flags["SINGLE_PART"] = (
             f"single-partition exchange consumed by {sorted(set(bad))}"
         )
+    dup = sorted(u for u, n in Counter(_sink_udfs(plan)).items() if n > 1)
+    if dup:
+        flags["DUP_SINK"] = f"tile writer {dup} planned more than once"
     return flags
 
 
