@@ -57,6 +57,9 @@ import struct
 import zlib
 from pathlib import Path
 
+from ._bitio import (LSBReader, LSBWriter, canonical_codes,
+                     package_merge_lengths)
+
 # --------------------------------------------------------------------------
 # static data (RFC 7932 Appendices A/B + section 7.1), frozen by
 # tools/extract_brotli_data.py
@@ -135,82 +138,26 @@ _REPEAT_PREVIOUS = 16
 _REPEAT_ZERO = 17
 
 # --------------------------------------------------------------------------
-# bitstream: LSB-first, forward (RFC 7932 section 3.1)
-# --------------------------------------------------------------------------
-
-
-class _Bits:
-    __slots__ = ("data", "pos")
-
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
-
-    def read(self, n: int) -> int:
-        pos = self.pos
-        end = pos + n
-        if end > len(self.data) * 8:
-            raise ValueError("brotli: truncated stream")
-        first = pos >> 3
-        last = (end - 1) >> 3
-        chunk = int.from_bytes(self.data[first:last + 1], "little")
-        self.pos = end
-        return (chunk >> (pos & 7)) & ((1 << n) - 1)
-
-    def read_bit(self) -> int:
-        pos = self.pos
-        if pos >= len(self.data) * 8:
-            raise ValueError("brotli: truncated stream")
-        self.pos = pos + 1
-        return (self.data[pos >> 3] >> (pos & 7)) & 1
-
-    def align(self) -> None:
-        rem = self.pos & 7
-        if rem:
-            pad = self.read(8 - rem)
-            if pad:
-                raise ValueError("brotli: non-zero padding bits")
-
-    def take_bytes(self, n: int) -> bytes:
-        if self.pos & 7:
-            raise ValueError("brotli: unaligned byte copy")
-        start = self.pos >> 3
-        if start + n > len(self.data):
-            raise ValueError("brotli: truncated stream")
-        self.pos += n * 8
-        return self.data[start:start + n]
-
-
-# --------------------------------------------------------------------------
 # prefix codes (RFC 7932 sections 3.2-3.5).  Codes are canonical; bits
 # are read MSB-of-code first (code = code<<1 | next_bit), as in DEFLATE.
 # --------------------------------------------------------------------------
 
 
 class _PrefixCode:
-    __slots__ = ("map", "single", "min_len", "max_len")
+    __slots__ = ("map", "single", "max_len")
 
     def __init__(self, lengths: dict[int, int],
                  single: int | None = None) -> None:
         self.single = single
         self.map: dict[int, int] = {}
+        self.max_len = 0
         if single is not None:
-            self.min_len = self.max_len = 0
             return
-        by_len: dict[int, list[int]] = {}
-        for sym, ln in lengths.items():
-            if ln:
-                by_len.setdefault(ln, []).append(sym)
-        code = 0
-        self.min_len = min(by_len)
-        self.max_len = max(by_len)
-        for ln in range(self.min_len, self.max_len + 1):
-            for sym in sorted(by_len.get(ln, ())):
-                self.map[(ln << 24) | code] = sym
-                code += 1
-            code <<= 1
+        for sym, (code, ln) in canonical_codes(lengths).items():
+            self.map[(ln << 24) | code] = sym
+        self.max_len = max(lengths.values())
 
-    def decode(self, bits: _Bits) -> int:
+    def decode(self, bits: LSBReader) -> int:
         if self.single is not None:
             return self.single
         code = 0
@@ -234,7 +181,7 @@ def _alphabet_bits(alphabet_size: int) -> int:
     return max(1, (alphabet_size - 1).bit_length())
 
 
-def _read_prefix_code(bits: _Bits, alphabet_size: int) -> _PrefixCode:
+def _read_prefix_code(bits: LSBReader, alphabet_size: int) -> _PrefixCode:
     hskip = bits.read(2)
     if hskip == 1:  # simple code
         nsym = bits.read(2) + 1
@@ -324,7 +271,7 @@ def _read_prefix_code(bits: _Bits, alphabet_size: int) -> _PrefixCode:
 # --------------------------------------------------------------------------
 
 
-def _read_256(bits: _Bits) -> int:
+def _read_256(bits: LSBReader) -> int:
     if bits.read_bit() == 0:
         return 1
     n = bits.read(3)
@@ -348,7 +295,7 @@ def _inverse_mtf(values: list[int]) -> None:
             mtf.insert(0, val)
 
 
-def _read_context_map(bits: _Bits, n_trees: int, size: int) -> list[int]:
+def _read_context_map(bits: LSBReader, n_trees: int, size: int) -> list[int]:
     if n_trees == 1:
         return [0] * size
     rlemax = (bits.read(4) + 1) if bits.read_bit() else 0
@@ -384,7 +331,7 @@ class _BlockState:
     __slots__ = ("n_types", "btype", "prev", "count",
                  "type_code", "count_code")
 
-    def __init__(self, bits: _Bits) -> None:
+    def __init__(self, bits: LSBReader) -> None:
         self.n_types = _read_256(bits)
         self.btype = 0
         self.prev = 1
@@ -396,11 +343,11 @@ class _BlockState:
             self.type_code = self.count_code = None
             self.count = 1 << 62
 
-    def _read_count(self, bits: _Bits) -> int:
+    def _read_count(self, bits: LSBReader) -> int:
         sym = self.count_code.decode(bits)
         return _BLOCK_COUNT_BASE[sym] + bits.read(_BLOCK_COUNT_EXTRA[sym])
 
-    def maybe_switch(self, bits: _Bits) -> None:
+    def maybe_switch(self, bits: LSBReader) -> None:
         if self.count == 0:
             sym = self.type_code.decode(bits)
             if sym == 0:
@@ -466,7 +413,7 @@ def _transform_word(word: bytes, transform_id: int) -> bytes:
 # --------------------------------------------------------------------------
 
 
-def _read_wbits(bits: _Bits) -> int:
+def _read_wbits(bits: LSBReader) -> int:
     if bits.read_bit() == 0:
         return 16
     n = bits.read(3)
@@ -483,7 +430,7 @@ def _read_wbits(bits: _Bits) -> int:
 def decompress(data: bytes, max_output: int | None = None) -> bytes:
     """Decode one complete brotli stream (RFC 7932 section 10)."""
     size_bits, dict_data, ctx_lut, _ = _static_data()
-    bits = _Bits(data)
+    bits = LSBReader(data)
     wbits = _read_wbits(bits)
     window_size = (1 << wbits) - 16
     out = bytearray()
@@ -671,49 +618,12 @@ def decompress(data: bytes, max_output: int | None = None) -> bytes:
 # --------------------------------------------------------------------------
 
 
-class _BitWriter:
-    __slots__ = ("buf", "acc", "n")
-
-    def __init__(self) -> None:
-        self.buf = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        self.acc |= value << self.n
-        self.n += nbits
-        while self.n >= 8:
-            self.buf.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.n -= 8
-
-    def write_code(self, code: int, length: int) -> None:
-        """Emit a prefix-code word: bits go out MSB-of-code first,
-        matching the decoder's ``code = code<<1 | next_bit`` walk."""
-        for i in range(length - 1, -1, -1):
-            self.write((code >> i) & 1, 1)
-
-    def align(self) -> None:
-        if self.n:
-            self.buf.append(self.acc & 0xFF)
-            self.acc = 0
-            self.n = 0
-
-    def raw(self, data: bytes) -> None:
-        assert self.n == 0
-        self.buf += data
-
-    def getvalue(self) -> bytes:
-        self.align()
-        return bytes(self.buf)
-
-
-def _stream_header(wbits: int) -> _BitWriter:
+def _stream_header(wbits: int) -> LSBWriter:
     """A writer primed with the WBITS stream header (section 9.1) —
     shared by the store-mode and entropy-coded encoders."""
     if not 10 <= wbits <= 24:
         raise ValueError("brotli: WBITS must be in 10..24")
-    w = _BitWriter()
+    w = LSBWriter()
     if wbits == 16:
         w.write(0, 1)
     elif wbits >= 18:
@@ -785,29 +695,6 @@ def decode_content_encoding(body: bytes, encoding: str) -> bytes:
 # --------------------------------------------------------------------------
 
 
-# package-merge length-limited Huffman, shared with the zstd encoder
-# (Kraft-complete by construction — the decoder's 32768-space
-# accounting requires exactness)
-from .zstd import _pm_lengths  # noqa: E402
-
-
-def _canonical_codes(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
-    """symbol -> (code, length), the same (length, symbol)-ordered
-    assignment the decoder's ``_PrefixCode`` builds."""
-    by_len: dict[int, list[int]] = {}
-    for sym, ln in lengths.items():
-        if ln:
-            by_len.setdefault(ln, []).append(sym)
-    out: dict[int, tuple[int, int]] = {}
-    code = 0
-    for ln in range(min(by_len), max(by_len) + 1):
-        for sym in sorted(by_len.get(ln, ())):
-            out[sym] = (code, ln)
-            code += 1
-        code <<= 1
-    return out
-
-
 def _zero_run_codes(total: int) -> list[tuple[int, int]]:
     """(extra_bits_value, n_extra_bits) per 17-code so the decoder's
     non-linear repeat accumulation lands on exactly ``total`` zeros
@@ -843,7 +730,7 @@ _CLC_WRITE = {0: (0b00, 2), 3: (0b01, 2), 4: (0b10, 2),
               2: (0b110, 3), 1: (0b1110, 4), 5: (0b1111, 4)}
 
 
-def _write_prefix_code(w: _BitWriter, counts: dict[int, int],
+def _write_prefix_code(w: LSBWriter, counts: dict[int, int],
                        alphabet_size: int) -> dict[int, tuple[int, int]]:
     """Write one prefix-code header (simple or complex form) for the
     observed symbol ``counts``; returns symbol -> (code, len) for the
@@ -858,7 +745,7 @@ def _write_prefix_code(w: _BitWriter, counts: dict[int, int],
         return {sym: (0, 0)}
     if len(counts) <= 4:
         if len(counts) == 4:
-            pm = _pm_lengths(counts, 15)
+            pm = package_merge_lengths(counts, 15)
             tree_select = 0 if max(pm.values()) == 2 else 1
             lens = (2, 2, 2, 2) if tree_select == 0 else (1, 2, 3, 3)
         else:
@@ -878,10 +765,10 @@ def _write_prefix_code(w: _BitWriter, counts: dict[int, int],
             w.write(s, width)
         if tree_select is not None:
             w.write(tree_select, 1)
-        return _canonical_codes(assignment)
+        return canonical_codes(assignment)
 
     # complex form
-    lengths = _pm_lengths(counts, 15)
+    lengths = package_merge_lengths(counts, 15)
     arr = [0] * alphabet_size
     for s, ln in lengths.items():
         arr[s] = ln
@@ -921,8 +808,8 @@ def _write_prefix_code(w: _BitWriter, counts: dict[int, int],
     if len(clc_counts) == 1:
         clc_lengths = {next(iter(clc_counts)): 1}
     else:
-        clc_lengths = _pm_lengths(clc_counts, 5)
-    clc_codes = _canonical_codes(clc_lengths) if len(clc_counts) > 1 \
+        clc_lengths = package_merge_lengths(clc_counts, 5)
+    clc_codes = canonical_codes(clc_lengths) if len(clc_counts) > 1 \
         else {next(iter(clc_counts)): (0, 0)}
 
     w.write(0, 2)  # HSKIP = 0 -> complex form
@@ -942,7 +829,7 @@ def _write_prefix_code(w: _BitWriter, counts: dict[int, int],
         w.write_code(c, ln)
         if nbits:
             w.write(extra, nbits)
-    return _canonical_codes(lengths)
+    return canonical_codes(lengths)
 
 
 def _insert_code(n: int) -> int:
@@ -1079,7 +966,7 @@ def _encode_meta_block(chunk: bytes,
                         lits, dinfo))
         pos += ins + cpy
 
-    w = _BitWriter()
+    w = LSBWriter()
     # block types: 1 literal, 1 insert-copy, 1 distance
     for _ in range(3):
         w.write(0, 1)                       # NBLTYPES = 1
@@ -1111,5 +998,4 @@ def _encode_meta_block(chunk: bytes,
     total_bits = len(w.buf) * 8 + w.n
     if total_bits >= len(chunk) * 8:
         return None
-    tail = bytes([w.acc & 0xFF]) if w.n else b""
-    return bytes(w.buf) + tail, total_bits
+    return w.getvalue(), total_bits

@@ -32,6 +32,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from ._bitio import MSBReader, MSBWriter
+
 # --- T.4 §4.1 run-length code tables: run -> (code_value, bit_length) ---
 _WHITE_CODES = {
     0: (0b00110101, 8), 1: (0b000111, 6), 2: (0b0111, 4), 3: (0b1000, 4),
@@ -144,41 +146,18 @@ _MODE_DEC[(3, 0b001)] = ("h", 0)
 _MODE_DEC[(12, 0b000000000001)] = ("eol", 0)
 
 
-class _Bits:
-    """MSB-first bit writer."""
-
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def put(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | code
-        self.n += length
-        while self.n >= 8:
-            self.n -= 8
-            self.buf.append((self.acc >> self.n) & 0xFF)
-        self.acc &= (1 << self.n) - 1
-
-    def done(self) -> bytes:
-        if self.n:
-            self.buf.append((self.acc << (8 - self.n)) & 0xFF)
-            self.n = 0
-        return bytes(self.buf)
-
-
-def _put_run(bits: _Bits, run: int, table) -> None:
+def _put_run(bits: MSBWriter, run: int, table) -> None:
     while run >= 2624:  # chain max make-ups for very wide runs
         code, n = table[2560]
-        bits.put(code, n)
+        bits.write(code, n)
         run -= 2560
     if run >= 64:
         makeup = (run // 64) * 64
         code, n = table[makeup]
-        bits.put(code, n)
+        bits.write(code, n)
         run -= makeup
     code, n = table[run]
-    bits.put(code, n)
+    bits.write(code, n)
 
 
 def _changes(row: np.ndarray) -> list[int]:
@@ -191,7 +170,7 @@ def _changes(row: np.ndarray) -> list[int]:
 def g4_encode(black: np.ndarray) -> bytes:
     """Encode a (h, w) boolean matrix (True = black) as a T.6 stream."""
     h, w = black.shape
-    bits = _Bits()
+    bits = MSBWriter()
     ref: list[int] = []
     for r in range(h):
         cur = _changes(black[r])
@@ -213,16 +192,16 @@ def g4_encode(black: np.ndarray) -> bytes:
             b1 = ref[bi] if bi < len(ref) else w
             b2 = ref[bi + 1] if bi + 1 < len(ref) else w
             if b2 < a1:
-                bits.put(*_MODE_PASS)
+                bits.write(*_MODE_PASS)
                 a0 = b2
             elif -3 <= a1 - b1 <= 3:
-                bits.put(*_MODE_V[a1 - b1])
+                bits.write(*_MODE_V[a1 - b1])
                 a0 = a1
                 color_white = not color_white
                 ci += 1
             else:
                 a2 = cur[ci + 1] if ci + 1 < len(cur) else w
-                bits.put(*_MODE_HORIZ)
+                bits.write(*_MODE_HORIZ)
                 start = a0 if a0 >= 0 else 0
                 first = _WHITE_CODES if color_white else _BLACK_CODES
                 second = _BLACK_CODES if color_white else _WHITE_CODES
@@ -231,41 +210,35 @@ def g4_encode(black: np.ndarray) -> bytes:
                 a0 = a2
                 ci += 2
         ref = cur
-    bits.put(0b000000000001, 12)  # EOFB = two EOLs (optional per TIFF,
-    bits.put(0b000000000001, 12)  # emitted for libtiff compatibility)
-    return bits.done()
+    bits.write(0b000000000001, 12)  # EOFB = two EOLs (optional per TIFF,
+    bits.write(0b000000000001, 12)  # emitted for libtiff compatibility)
+    return bits.getvalue()
 
 
-class _BitReader:
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.n = 0
-
-    def read_code(self, table, max_len: int = 14):
-        code = 0
-        for length in range(1, max_len + 1):
-            if self.n == 0:
-                if self.pos >= len(self.data):
-                    # trailing flush bits: signal exhaustion
-                    raise EOFError("end of G4 stream")
-                self.acc = self.data[self.pos]
-                self.pos += 1
-                self.n = 8
-            self.n -= 1
-            code = (code << 1) | ((self.acc >> self.n) & 1)
-            v = table.get((length, code))
-            if v is not None:
-                return v
-        raise ValueError("invalid T.6 code word")
+def _read_code(rd: MSBReader, table, max_len: int = 14):
+    """Walk ``table`` ({(length, code): value}) one bit at a time.
+    Running out of bits raises EOFError: the trailing flush bits of a
+    complete image end that way."""
+    code = 0
+    end = len(rd.data) * 8
+    for length in range(1, max_len + 1):
+        if rd.pos >= end:
+            raise EOFError("end of G4 stream")
+        code = (code << 1) | rd.read(1)
+        v = table.get((length, code))
+        if v is not None:
+            return v
+    raise ValueError("invalid T.6 code word")
 
 
-def _read_run(rd: _BitReader, white: bool) -> int:
+def _read_run(rd: MSBReader, white: bool) -> int:
     table = _WHITE_DEC if white else _BLACK_DEC
     total = 0
     while True:
-        run = rd.read_code(table)
+        try:
+            run = _read_code(rd, table)
+        except EOFError:
+            raise ValueError("ccitt: truncated T.6 stream") from None
         total += run
         if run < 64 or (run % 64 != 0):
             return total
@@ -275,7 +248,7 @@ def _read_run(rd: _BitReader, white: bool) -> int:
 def g4_decode(data: bytes, width: int, height: int) -> np.ndarray:
     """Decode a T.6 stream to a (height, width) boolean matrix
     (True = black)."""
-    rd = _BitReader(data)
+    rd = MSBReader(data)
     out = np.zeros((height, width), dtype=bool)
     ref: list[int] = []
     for r in range(height):
@@ -284,11 +257,11 @@ def g4_decode(data: bytes, width: int, height: int) -> np.ndarray:
         color_white = True
         while a0 < width:
             try:
-                mode, d = rd.read_code(_MODE_DEC)
+                mode, d = _read_code(rd, _MODE_DEC)
             except EOFError:
                 if a0 <= 0 and not cur:
                     break  # stream ended exactly at a row boundary
-                raise
+                raise ValueError("ccitt: truncated T.6 stream") from None
             if mode == "eol":
                 break
             want = 0 if color_white else 1

@@ -27,6 +27,8 @@ from __future__ import annotations
 
 import struct
 
+# record fields are zigzag varints: the same encoding as an Avro long
+from .avro import read_long, write_long
 from .tfrecord import crc32c
 
 _HEADER_LEN = 61  # baseOffset..recordsCount inclusive
@@ -34,60 +36,30 @@ _CRC_OFFSET = 21  # crc field position within the batch
 _MAGIC_OFFSET = 16
 
 
-def _zz_write(out: bytearray, v: int) -> None:
-    u = (v << 1) ^ (v >> 63)  # zigzag, int64 domain
-    u &= (1 << 64) - 1
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return
-
-
-def _zz_read(data: bytes, pos: int) -> tuple[int, int]:
-    u = 0
-    shift = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("kafka: truncated varint")
-        b = data[pos]
-        pos += 1
-        u |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-        if shift > 63:
-            raise ValueError("kafka: varint too long")
-    return (u >> 1) ^ -(u & 1), pos
-
-
 def _encode_record(offset_delta: int, ts_delta: int,
                    key: bytes | None, value: bytes | None,
                    headers: list[tuple[bytes, bytes]]) -> bytes:
     body = bytearray()
     body.append(0)  # record attributes (unused by the spec)
-    _zz_write(body, ts_delta)
-    _zz_write(body, offset_delta)
+    write_long(body, ts_delta)
+    write_long(body, offset_delta)
     for blob in (key, value):
         if blob is None:
-            _zz_write(body, -1)
+            write_long(body, -1)
         else:
-            _zz_write(body, len(blob))
+            write_long(body, len(blob))
             body += blob
-    _zz_write(body, len(headers))
+    write_long(body, len(headers))
     for hk, hv in headers:
-        _zz_write(body, len(hk))
+        write_long(body, len(hk))
         body += hk
         if hv is None:
-            _zz_write(body, -1)
+            write_long(body, -1)
         else:
-            _zz_write(body, len(hv))
+            write_long(body, len(hv))
             body += hv
     out = bytearray()
-    _zz_write(out, len(body))
+    write_long(out, len(body))
     return bytes(out) + bytes(body)
 
 
@@ -199,26 +171,26 @@ def _parse_batch(data: bytes, pos: int) -> tuple[list[dict], int]:
         p, bend = pos + 61, end
     records = []
     for _ in range(n_records):
-        rlen, p = _zz_read(buf, p)
+        rlen, p = read_long(buf, p)
         rend = p + rlen
         if rend > bend:
             raise ValueError("kafka: record overruns its batch")
         p += 1  # record attributes
-        ts_delta, p = _zz_read(buf, p)
-        off_delta, p = _zz_read(buf, p)
-        klen, p = _zz_read(buf, p)
+        ts_delta, p = read_long(buf, p)
+        off_delta, p = read_long(buf, p)
+        klen, p = read_long(buf, p)
         key = None if klen < 0 else buf[p:p + klen]
         p += max(klen, 0)
-        vlen, p = _zz_read(buf, p)
+        vlen, p = read_long(buf, p)
         value = None if vlen < 0 else buf[p:p + vlen]
         p += max(vlen, 0)
-        nh, p = _zz_read(buf, p)
+        nh, p = read_long(buf, p)
         headers = []
         for _ in range(nh):
-            hklen, p = _zz_read(buf, p)
+            hklen, p = read_long(buf, p)
             hk = buf[p:p + hklen]
             p += hklen
-            hvlen, p = _zz_read(buf, p)
+            hvlen, p = read_long(buf, p)
             hv = None if hvlen < 0 else buf[p:p + hvlen]
             p += max(hvlen, 0)
             headers.append((hk, hv))

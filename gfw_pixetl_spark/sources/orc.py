@@ -34,6 +34,8 @@ import struct
 import zlib
 from typing import Any, Iterable
 
+from ._bitio import read_uvarint, unzigzag, write_uvarint, zigzag
+
 MAGIC = b"ORC"
 
 # Type.Kind (orc_proto.proto, public)
@@ -88,26 +90,18 @@ C_ZSTD = 5
 # Minimal protobuf (proto2 wire format) encode/decode
 # --------------------------------------------------------------------------
 
-def _pb_varint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def pb_field(fid: int, wire: int, payload: int | bytes) -> bytes:
-    tag = _pb_varint((fid << 3) | wire)
+    out = bytearray()
+    write_uvarint(out, (fid << 3) | wire)
     if wire == 0:
-        return tag + _pb_varint(payload)  # type: ignore[arg-type]
-    if wire == 2:
+        write_uvarint(out, payload)  # type: ignore[arg-type]
+    elif wire == 2:
         assert isinstance(payload, (bytes, bytearray))
-        return tag + _pb_varint(len(payload)) + bytes(payload)
-    raise ValueError(f"wire {wire}")
+        write_uvarint(out, len(payload))
+        out += payload
+    else:
+        raise ValueError(f"wire {wire}")
+    return bytes(out)
 
 
 def pb_decode(data: bytes) -> dict[int, list[Any]]:
@@ -116,63 +110,31 @@ def pb_decode(data: bytes) -> dict[int, list[Any]]:
     pos = 0
     n = len(data)
     while pos < n:
-        key = 0
-        shift = 0
-        while True:
-            b = data[pos]
-            pos += 1
-            key |= (b & 0x7F) << shift
-            if not b & 0x80:
-                break
-            shift += 7
+        key, pos = read_uvarint(data, pos)
         fid, wire = key >> 3, key & 7
         if wire == 0:
-            v = 0
-            shift = 0
-            while True:
-                b = data[pos]
-                pos += 1
-                v |= (b & 0x7F) << shift
-                if not b & 0x80:
-                    break
-                shift += 7
-            fields.setdefault(fid, []).append(v)
+            v, pos = read_uvarint(data, pos)
         elif wire == 2:
-            ln = 0
-            shift = 0
-            while True:
-                b = data[pos]
-                pos += 1
-                ln |= (b & 0x7F) << shift
-                if not b & 0x80:
-                    break
-                shift += 7
-            fields.setdefault(fid, []).append(bytes(data[pos:pos + ln]))
+            ln, pos = read_uvarint(data, pos)
+            if pos + ln > n:
+                raise ValueError("orc: truncated protobuf field")
+            v = bytes(data[pos:pos + ln])
             pos += ln
-        elif wire == 5:
-            fields.setdefault(fid, []).append(
-                struct.unpack_from("<I", data, pos)[0])
-            pos += 4
-        elif wire == 1:
-            fields.setdefault(fid, []).append(
-                struct.unpack_from("<Q", data, pos)[0])
-            pos += 8
+        elif wire in (1, 5):  # fixed64 / fixed32
+            width = 8 if wire == 1 else 4
+            if pos + width > n:
+                raise ValueError("orc: truncated protobuf field")
+            v = int.from_bytes(data[pos:pos + width], "little")
+            pos += width
         else:
             raise ValueError(f"unsupported protobuf wire type {wire}")
+        fields.setdefault(fid, []).append(v)
     return fields
 
 
 def _one(fields: dict[int, list[Any]], fid: int, default: Any = None) -> Any:
     v = fields.get(fid)
     return v[0] if v else default
-
-
-def _zz_enc(n: int) -> int:
-    return (n << 1) ^ (n >> 63) if n < 0 else n << 1
-
-
-def _zz_dec(n: int) -> int:
-    return (n >> 1) ^ -(n & 1)
 
 
 # --------------------------------------------------------------------------
@@ -297,18 +259,6 @@ def bool_rle_decode(data: bytes, n: int) -> list[bool]:
     return [bool(raw[i >> 3] & (0x80 >> (i & 7))) for i in range(n)]
 
 
-def _varint_enc(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 class _Reader:
     __slots__ = ("data", "pos")
 
@@ -317,28 +267,16 @@ class _Reader:
         self.pos = pos
 
     def byte(self) -> int:
+        if self.pos >= len(self.data):
+            raise ValueError("orc: truncated stream")
         b = self.data[self.pos]
         self.pos += 1
         return b
 
-    def varint(self) -> int:
-        v = 0
-        shift = 0
-        while True:
-            b = self.data[self.pos]
-            self.pos += 1
-            v |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return v
-            shift += 7
-
-    def eof(self) -> bool:
-        return self.pos >= len(self.data)
-
 
 def int_rle1_encode(values: list[int], signed: bool) -> bytes:
     """ORC RLE v1: runs of 3-130 with byte delta, or 1-128 literals."""
-    enc = [(_zz_enc(v) if signed else v) for v in values]
+    enc = [(zigzag(v) if signed else v) for v in values]
     out = bytearray()
     i = 0
     n = len(values)
@@ -355,7 +293,7 @@ def int_rle1_encode(values: list[int], signed: bool) -> bytes:
         if run >= 3:
             out.append(run - 3)
             out.append(delta & 0xFF)
-            out += _varint_enc(enc[i])
+            write_uvarint(out, enc[i])
             i += run
             continue
         j = i
@@ -367,7 +305,7 @@ def int_rle1_encode(values: list[int], signed: bool) -> bytes:
             j += 1
         out.append(256 - (j - i))
         for k in range(i, j):
-            out += _varint_enc(enc[k])
+            write_uvarint(out, enc[k])
         i = j
     return bytes(out)
 
@@ -381,16 +319,16 @@ def int_rle1_decode(r: _Reader, n: int, signed: bool) -> list[int]:
             delta = r.byte()
             if delta >= 128:
                 delta -= 256
-            base = r.varint()
+            base, r.pos = read_uvarint(r.data, r.pos)
             if signed:
-                base = _zz_dec(base)
+                base = unzigzag(base)
             for k in range(count):
                 out.append(base + k * delta)
         else:
             count = 256 - h
             for _ in range(count):
-                v = r.varint()
-                out.append(_zz_dec(v) if signed else v)
+                v, r.pos = read_uvarint(r.data, r.pos)
+                out.append(unzigzag(v) if signed else v)
     return out[:n]
 
 
@@ -434,13 +372,13 @@ def int_rle2_decode(r: _Reader, n: int, signed: bool) -> list[int]:
             repeat = (first & 0x07) + 3
             v = _read_be(r, width)
             if signed:
-                v = _zz_dec(v)
+                v = unzigzag(v)
             out += [v] * repeat
         elif mode == 1:  # DIRECT
             width = _decode_width((first >> 1) & 0x1F)
             length = ((first & 1) << 8 | r.byte()) + 1
             vals = _read_bitpacked(r, length, width)
-            out += [_zz_dec(v) for v in vals] if signed else vals
+            out += [unzigzag(v) for v in vals] if signed else vals
         elif mode == 2:  # PATCHED_BASE
             width = _decode_width((first >> 1) & 0x1F)
             length = ((first & 1) << 8 | r.byte()) + 1
@@ -468,9 +406,10 @@ def int_rle2_decode(r: _Reader, n: int, signed: bool) -> list[int]:
             wcode = (first >> 1) & 0x1F
             width = 0 if wcode == 0 else _decode_width(wcode)
             length = ((first & 1) << 8 | r.byte()) + 1  # total value count
-            base = r.varint()
-            base = _zz_dec(base) if signed else base
-            delta_base = _zz_dec(r.varint())
+            base, r.pos = read_uvarint(r.data, r.pos)
+            base = unzigzag(base) if signed else base
+            delta_base, r.pos = read_uvarint(r.data, r.pos)
+            delta_base = unzigzag(delta_base)
             seq = [base]
             if length >= 2:
                 seq.append(base + delta_base)
@@ -532,7 +471,7 @@ def int_rle2_encode(values: list[int], signed: bool) -> bytes:
         else:
             delta = 0
         if run >= 3 and delta == 0 and run <= 10:
-            v = _zz_enc(values[i]) if signed else values[i]
+            v = zigzag(values[i]) if signed else values[i]
             w = max(1, (v.bit_length() + 7) // 8)
             out.append((0 << 6) | ((w - 1) << 3) | (run - 3))
             out += v.to_bytes(w, "big")
@@ -542,9 +481,9 @@ def int_rle2_encode(values: list[int], signed: bool) -> bytes:
             # DELTA, width 0: base, delta-base, constant stride
             out.append((3 << 6) | ((run - 1) >> 8 & 1))
             out.append((run - 1) & 0xFF)
-            base = _zz_enc(values[i]) if signed else values[i]
-            out += _varint_enc(base)
-            out += _varint_enc(_zz_enc(delta))
+            base = zigzag(values[i]) if signed else values[i]
+            write_uvarint(out, base)
+            write_uvarint(out, zigzag(delta))
             i += run
             continue
         # DIRECT literals: until the next >=3 fixed-delta run, max 512
@@ -556,7 +495,7 @@ def int_rle2_encode(values: list[int], signed: bool) -> bytes:
                     break
             j += 1
         lits = values[i:j]
-        enc = [(_zz_enc(v) if signed else v) for v in lits]
+        enc = [(zigzag(v) if signed else v) for v in lits]
         width = _closest_fixed_bits(max(1, max(v.bit_length()
                                                for v in enc)))
         wcode = _FBS.index(width)
@@ -582,9 +521,9 @@ def _int_stats(values: list[int | None]) -> bytes:
     present = [v for v in values if v is not None]
     inner = b""
     if present:
-        inner = (pb_field(1, 0, _zz_enc(min(present)))
-                 + pb_field(2, 0, _zz_enc(max(present)))
-                 + pb_field(3, 0, _zz_enc(sum(present))))
+        inner = (pb_field(1, 0, zigzag(min(present)))
+                 + pb_field(2, 0, zigzag(max(present)))
+                 + pb_field(3, 0, zigzag(sum(present))))
     # ColumnStatistics: numberOfValues(1), intStatistics(2), hasNull(10)
     return (pb_field(1, 0, len(present))
             + pb_field(2, 2, inner)
@@ -597,7 +536,7 @@ def _str_stats(values: list[str | None]) -> bytes:
     if present:
         inner = (pb_field(1, 2, min(present).encode())
                  + pb_field(2, 2, max(present).encode())
-                 + pb_field(3, 0, _zz_enc(sum(len(s) for s in present))))
+                 + pb_field(3, 0, zigzag(sum(len(s) for s in present))))
     return (pb_field(1, 0, len(present))
             + pb_field(4, 2, inner)  # stringStatistics(4)
             + pb_field(10, 0, 1 if len(present) != len(values) else 0))
@@ -614,14 +553,14 @@ def decode_int_stats(blob: bytes) -> dict[str, Any]:
     out = {"n_values": _one(f, 1, 0), "has_null": bool(_one(f, 10, 0))}
     if 2 in f:
         inner = pb_decode(f[2][0])
-        out["min"] = _zz_dec(_one(inner, 1)) if 1 in inner else None
-        out["max"] = _zz_dec(_one(inner, 2)) if 2 in inner else None
-        out["sum"] = _zz_dec(_one(inner, 3)) if 3 in inner else None
+        out["min"] = unzigzag(_one(inner, 1)) if 1 in inner else None
+        out["max"] = unzigzag(_one(inner, 2)) if 2 in inner else None
+        out["sum"] = unzigzag(_one(inner, 3)) if 3 in inner else None
     if 4 in f:
         inner = pb_decode(f[4][0])
         out["min"] = (inner[1][0].decode() if 1 in inner else None)
         out["max"] = (inner[2][0].decode() if 2 in inner else None)
-        out["sum"] = _zz_dec(_one(inner, 3)) if 3 in inner else None
+        out["sum"] = unzigzag(_one(inner, 3)) if 3 in inner else None
     return out
 
 
@@ -725,7 +664,7 @@ def _encode_column(kind: int, values: list, compression: int,
         body = bytearray()
         for v in present_vals:
             q = Decimal(str(v)).scaleb(scale)
-            body += _varint_enc(_zz_enc(int(q)))
+            write_uvarint(body, zigzag(int(q)))
         streams.append((S_DATA, bytes(body)))
         streams.append((S_SECONDARY, int_enc(
             [scale] * len(present_vals), signed=True)))
@@ -866,13 +805,13 @@ def _merge_stats(stats: list[bytes]) -> bytes:
     raw = pb_decode(stats[0])
     out = pb_field(1, 0, n)
     if 2 in raw and mins:
-        out += pb_field(2, 2, pb_field(1, 0, _zz_enc(min(mins)))
-                        + pb_field(2, 0, _zz_enc(max(maxs)))
-                        + pb_field(3, 0, _zz_enc(sum(sums))))
+        out += pb_field(2, 2, pb_field(1, 0, zigzag(min(mins)))
+                        + pb_field(2, 0, zigzag(max(maxs)))
+                        + pb_field(3, 0, zigzag(sum(sums))))
     elif 4 in raw and mins:
         out += pb_field(4, 2, pb_field(1, 2, min(mins).encode())
                         + pb_field(2, 2, max(maxs).encode())
-                        + pb_field(3, 0, _zz_enc(sum(sums))))
+                        + pb_field(3, 0, zigzag(sum(sums))))
     out += pb_field(10, 0, 1 if has_null else 0)
     return out
 
@@ -919,9 +858,10 @@ class OrcFile:
             subs: list[int] = []
             for sv in tf.get(2, []):
                 if isinstance(sv, bytes):  # packed repeated uint32
-                    rr = _Reader(sv)
-                    while not rr.eof():
-                        subs.append(rr.varint())
+                    pos = 0
+                    while pos < len(sv):
+                        sub, pos = read_uvarint(sv, pos)
+                        subs.append(sub)
                 else:
                     subs.append(sv)
             self.types.append({
@@ -1035,8 +975,13 @@ class OrcFile:
         if kind == K_DECIMAL:
             from decimal import Decimal
 
-            r = _Reader(self._stream_bytes(specs[S_DATA]))
-            mants = [_zz_dec(r.varint()) for _ in range(nv)]
+            # decimal128 mantissas reach 19 varint bytes
+            data = self._stream_bytes(specs[S_DATA])
+            pos = 0
+            mants = []
+            for _ in range(nv):
+                u, pos = read_uvarint(data, pos, max_bytes=19)
+                mants.append(unzigzag(u))
             scales = int_rle_decode(
                 self._stream_bytes(specs[S_SECONDARY]), nv, True,
                 rle_ver)

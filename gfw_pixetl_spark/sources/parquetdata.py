@@ -36,7 +36,8 @@ import struct
 import zlib
 from typing import Any, BinaryIO
 
-from .parquetmeta import _read_struct, _read_varint, read_metadata
+from ._bitio import read_uvarint, unzigzag, write_uvarint, zigzag
+from .parquetmeta import _read_struct, read_metadata
 
 _PAGE_DATA = 0
 _PAGE_DICT = 2
@@ -118,7 +119,7 @@ def rle_bp_hybrid(data: bytes, pos: int, width: int, count: int,
     out: list[int] = []
     byte_w = (width + 7) // 8
     while len(out) < count and pos < len(data):
-        header, pos = _read_varint(data, pos)
+        header, pos = read_uvarint(data, pos)
         if header & 1:  # bit-packed groups of 8
             n_groups = header >> 1
             n = n_groups * 8
@@ -173,21 +174,24 @@ def _plain_values(data: bytes, pos: int, n: int, ptype: str,
     raise ValueError(f"parquet: unsupported physical type {ptype}")
 
 
-def _zz_dec(v: int) -> int:
-    return (v >> 1) ^ -(v & 1)
+def _wrap_i64(v: int) -> int:
+    return ((v + (1 << 63)) & ((1 << 64) - 1)) - (1 << 63)
 
 
 def _delta_binary_packed(data: bytes, pos: int, n: int,
                          ) -> tuple[list[int], int]:
-    block_size, pos = _read_varint(data, pos)
-    n_mini, pos = _read_varint(data, pos)
-    total, pos = _read_varint(data, pos)
-    first_raw, pos = _read_varint(data, pos)
-    out = [_zz_dec(first_raw)]
+    block_size, pos = read_uvarint(data, pos)
+    n_mini, pos = read_uvarint(data, pos)
+    total, pos = read_uvarint(data, pos)
+    first_raw, pos = read_uvarint(data, pos)
+    if n_mini == 0 or block_size % n_mini:
+        raise ValueError(f"parquet: DELTA_BINARY_PACKED block of "
+                         f"{block_size} values in {n_mini} miniblocks")
+    out = [unzigzag(first_raw)]
     per_mini = block_size // n_mini
     while len(out) < total:
-        md_raw, pos = _read_varint(data, pos)
-        min_delta = _zz_dec(md_raw)
+        md_raw, pos = read_uvarint(data, pos)
+        min_delta = unzigzag(md_raw)
         widths = list(data[pos:pos + n_mini])
         pos += n_mini
         for w in widths:
@@ -201,23 +205,22 @@ def _delta_binary_packed(data: bytes, pos: int, n: int,
             else:
                 deltas, pos = _unpack_lsb(data, pos, per_mini, w)
             take = min(per_mini, total - len(out))
+            # both paths add in int64 with wraparound: valid streams
+            # decode exactly (every true value fits the column's
+            # physical type), corrupt ones to the same values either way
             if take >= 16 and w <= 56:
-                # prefix-sum the miniblock in one shot; int64 wraparound
-                # reproduces arbitrary-precision results exactly because
-                # every true value fits the column's physical type
+                # prefix-sum the miniblock in one shot
                 import numpy as np
 
-                md = ((min_delta + (1 << 63)) & ((1 << 64) - 1)) - (1 << 63)
-                prev = ((out[-1] + (1 << 63)) & ((1 << 64) - 1)) - (1 << 63)
+                md = np.int64(_wrap_i64(min_delta))
+                prev = np.int64(_wrap_i64(out[-1]))
                 with np.errstate(over="ignore"):
                     vals = (np.asarray(deltas[:take], dtype=np.int64)
-                            + np.int64(md)).cumsum() + np.int64(prev)
+                            + md).cumsum() + prev
                 out.extend(vals.tolist())
             else:
-                for d in deltas:
-                    if len(out) >= total:
-                        break
-                    out.append(out[-1] + min_delta + d)
+                for d in deltas[:take]:
+                    out.append(_wrap_i64(out[-1] + min_delta + d))
     return out[:n], pos
 
 
@@ -378,29 +381,6 @@ _CT_TRUE, _CT_FALSE, _CT_I32, _CT_I64 = 1, 2, 5, 6
 _CT_DOUBLE, _CT_BINARY, _CT_LIST, _CT_STRUCT = 7, 8, 9, 12
 
 
-def _w_varint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _w_zigzag(n: int) -> bytes:
-    return _w_varint((n << 1) ^ (n >> 63) if n < 0 else n << 1)
-
-
-def _w_field(last_fid: int, fid: int, ctype: int) -> bytes:
-    delta = fid - last_fid
-    if 1 <= delta <= 15:
-        return bytes([(delta << 4) | ctype])
-    return bytes([ctype]) + _w_zigzag(fid)
-
-
 class _StructW:
     """Thrift-compact struct writer (fields must be added in id order)."""
 
@@ -408,40 +388,44 @@ class _StructW:
         self.buf = bytearray()
         self.last = 0
 
-    def i(self, fid: int, v: int, wide: bool = True) -> "_StructW":
-        self.buf += _w_field(self.last, fid, _CT_I64 if wide else _CT_I32)
-        self.buf += _w_zigzag(int(v))
+    def _field(self, fid: int, ctype: int) -> None:
+        delta = fid - self.last
+        if 1 <= delta <= 15:
+            self.buf.append((delta << 4) | ctype)
+        else:
+            self.buf.append(ctype)
+            write_uvarint(self.buf, zigzag(fid))
         self.last = fid
+
+    def i(self, fid: int, v: int, wide: bool = True) -> "_StructW":
+        self._field(fid, _CT_I64 if wide else _CT_I32)
+        write_uvarint(self.buf, zigzag(int(v)))
         return self
 
     def b(self, fid: int, v: bool) -> "_StructW":
-        self.buf += _w_field(self.last, fid,
-                             _CT_TRUE if v else _CT_FALSE)
-        self.last = fid
+        self._field(fid, _CT_TRUE if v else _CT_FALSE)
         return self
 
     def s(self, fid: int, v: bytes) -> "_StructW":
-        self.buf += _w_field(self.last, fid, _CT_BINARY)
-        self.buf += _w_varint(len(v)) + v
-        self.last = fid
+        self._field(fid, _CT_BINARY)
+        write_uvarint(self.buf, len(v))
+        self.buf += v
         return self
 
     def lst(self, fid: int, etype: int, items: list[bytes]) -> "_StructW":
-        self.buf += _w_field(self.last, fid, _CT_LIST)
+        self._field(fid, _CT_LIST)
         if len(items) < 15:
             self.buf.append((len(items) << 4) | etype)
         else:
             self.buf.append(0xF0 | etype)
-            self.buf += _w_varint(len(items))
+            write_uvarint(self.buf, len(items))
         for it in items:
             self.buf += it
-        self.last = fid
         return self
 
     def st(self, fid: int, inner: "_StructW") -> "_StructW":
-        self.buf += _w_field(self.last, fid, _CT_STRUCT)
+        self._field(fid, _CT_STRUCT)
         self.buf += inner.done()
-        self.last = fid
         return self
 
     def done(self) -> bytes:
@@ -493,7 +477,7 @@ def _rle_levels(defs: list[int]) -> bytes:
         j = i
         while j < n and defs[j] == defs[i]:
             j += 1
-        body += _w_varint((j - i) << 1)
+        write_uvarint(body, (j - i) << 1)
         body.append(defs[i])
         i = j
     return struct.pack("<I", len(body)) + bytes(body)
@@ -564,12 +548,14 @@ def write_parquet(path: str, columns: list[PColumn],
             if present and col.ptype != "BOOLEAN":
                 stats.s(5, _stat_bytes(col.ptype, max(present)))
                 stats.s(6, _stat_bytes(col.ptype, min(present)))
+            in_schema = bytearray()  # path_in_schema: one binary element
+            write_uvarint(in_schema, len(col.name.encode()))
+            in_schema += col.name.encode()
             md = (_StructW()
                   .i(1, _W_TYPES[col.ptype], wide=False)
-                  .lst(2, _CT_I32, [_w_zigzag(0), _w_zigzag(3)])
-                  .lst(3, _CT_BINARY,
-                       [_w_varint(len(col.name.encode()))
-                        + col.name.encode()])
+                  .lst(2, _CT_I32, [bytes([zigzag(0)]),   # PLAIN
+                                    bytes([zigzag(3)])])  # RLE
+                  .lst(3, _CT_BINARY, [bytes(in_schema)])
                   .i(4, codec_id, wide=False)
                   .i(5, len(vals))
                   .i(6, len(header) + len(raw))

@@ -21,9 +21,9 @@ Decoder scope — the full lossless feature set:
 
 The encoder emits genuinely compressed streams (subtract-green, color
 cache, greedy LZ77 over the linear pixel sequence, package-merge
-length-limited prefix codes reusing ``zstd._pm_lengths``) and can be
-forced through the palette path; every stream it writes decodes through
-the decoder above, and hypothesis round trips in tests/test_webp.py
+length-limited prefix codes from ``_bitio``) and can be forced through
+the palette path; every stream it writes decodes through the decoder
+above, and hypothesis round trips in tests/test_webp.py
 keep the pair honest. Lossy VP8 chunks are out of scope — declared,
 not stubbed (``decode_webp`` raises with the reason).
 
@@ -39,67 +39,17 @@ import struct
 
 import numpy as np
 
-from .zstd import _pm_lengths
+from ._bitio import (LSBReader, LSBWriter, canonical_codes,
+                     package_merge_lengths)
 
 # --------------------------------------------------------------------------
-# bit IO — VP8L packs bits LSB-first within bytes; prefix codes are read
-# MSB-of-code-first (the DEFLATE convention).
-# --------------------------------------------------------------------------
-
-
-class BitReader:
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0  # bit position
-
-    def read(self, n: int) -> int:
-        v = 0
-        for i in range(n):
-            byte = self.pos >> 3
-            if byte >= len(self.data):
-                raise ValueError("VP8L: bitstream truncated")
-            v |= ((self.data[byte] >> (self.pos & 7)) & 1) << i
-            self.pos += 1
-        return v
-
-
-class BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.bit = 0
-
-    def write(self, v: int, n: int) -> None:
-        for i in range(n):
-            if self.bit == 0:
-                self.out.append(0)
-            if (v >> i) & 1:
-                self.out[-1] |= 1 << self.bit
-            self.bit = (self.bit + 1) & 7
-
-    def bytes(self) -> bytes:
-        return bytes(self.out)
-
-
-# --------------------------------------------------------------------------
-# canonical prefix codes
+# canonical prefix codes. VP8L packs bits LSB-first within bytes; prefix
+# codes are read MSB-of-code first (the DEFLATE convention).
 # --------------------------------------------------------------------------
 
 # code-length-code symbol transmission order (spec section 6.2.2)
 CLC_ORDER = [17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13,
              14, 15]
-
-
-def _build_codes(lengths: list[int]) -> dict[int, tuple[int, int]]:
-    """Canonical code assignment: symbol -> (code, length), codes
-    increasing over (length, symbol)."""
-    codes: dict[int, tuple[int, int]] = {}
-    code, prev = 0, 0
-    for ln, sym in sorted((l, s) for s, l in enumerate(lengths) if l):
-        code <<= ln - prev
-        codes[sym] = (code, ln)
-        code += 1
-        prev = ln
-    return codes
 
 
 def _build_decode(lengths: list[int]):
@@ -108,15 +58,15 @@ def _build_decode(lengths: list[int]):
     nonzero = [(s, l) for s, l in enumerate(lengths) if l]
     if len(nonzero) == 1 and nonzero[0][1] == 0:
         return nonzero[0][0]
-    return {(ln, c): s for s, (c, ln) in _build_codes(lengths).items()}
+    return {(ln, c): s for s, (c, ln) in canonical_codes(lengths).items()}
 
 
-def _read_code(table, br: BitReader) -> int:
+def _read_code(table, br: LSBReader) -> int:
     if isinstance(table, int):
         return table
     code = length = 0
     while length <= 15:
-        code = (code << 1) | br.read(1)
+        code = (code << 1) | br.read_bit()
         length += 1
         sym = table.get((length, code))
         if sym is not None:
@@ -124,7 +74,7 @@ def _read_code(table, br: BitReader) -> int:
     raise ValueError("VP8L: invalid prefix code in stream")
 
 
-def _read_prefix_code(br: BitReader, alphabet_size: int):
+def _read_prefix_code(br: LSBReader, alphabet_size: int):
     if br.read(1):  # simple code
         num_symbols = br.read(1) + 1
         sym0 = br.read(8) if br.read(1) else br.read(1)
@@ -177,7 +127,7 @@ def _read_prefix_code(br: BitReader, alphabet_size: int):
 # --------------------------------------------------------------------------
 
 
-def _prefix_value(code: int, br: BitReader) -> int:
+def _prefix_value(code: int, br: LSBReader) -> int:
     if code < 4:
         return code + 1
     extra = (code - 2) >> 1
@@ -244,7 +194,7 @@ def _sub_size(size: int, bits: int) -> int:
     return (size + (1 << bits) - 1) >> bits
 
 
-def _decode_entropy_image(br: BitReader, w: int, h: int,
+def _decode_entropy_image(br: LSBReader, w: int, h: int,
                           is_level0: bool) -> list[int]:
     transforms = []
     if is_level0:
@@ -521,7 +471,7 @@ def _inv_palette(pixels: list[int], w: int, h: int, palette: list[int],
 
 def decode_vp8l(data: bytes) -> np.ndarray:
     """Decode a VP8L stream -> (h, w, 4) uint8 RGBA."""
-    br = BitReader(data)
+    br = LSBReader(data)
     if br.read(8) != 0x2F:
         raise ValueError("VP8L: bad signature byte")
     w = br.read(14) + 1
@@ -565,7 +515,7 @@ def decode_webp(data: bytes) -> np.ndarray:
 # --------------------------------------------------------------------------
 
 
-def _write_prefix_code(bw: BitWriter, lengths: list[int]) -> None:
+def _write_prefix_code(bw: LSBWriter, lengths: list[int]) -> None:
     """Emit a prefix code. Uses the simple form for 1-2 symbols <= 255,
     else the code-length-coded form (no repeat codes — each symbol's
     length emitted through the CLC, itself canonical over 19 symbols)."""
@@ -595,7 +545,7 @@ def _write_prefix_code(bw: BitWriter, lengths: list[int]) -> None:
         dummy = (seq[0] + 1) % 16
         clc_lengths19[dummy] = 1
     else:
-        pm = _pm_lengths(dict(counts), 7)
+        pm = package_merge_lengths(dict(counts), 7)
         clc_lengths19 = [0] * 19
         for s, ln in pm.items():
             clc_lengths19[s] = ln
@@ -603,7 +553,7 @@ def _write_prefix_code(bw: BitWriter, lengths: list[int]) -> None:
     bw.write(15, 4)
     for sym in CLC_ORDER:
         bw.write(clc_lengths19[sym], 3)
-    clc_codes = _build_codes(clc_lengths19)
+    clc_codes = canonical_codes(clc_lengths19)
     if up_to < len(lengths):
         # use max_symbol to stop early
         bw.write(1, 1)
@@ -615,22 +565,12 @@ def _write_prefix_code(bw: BitWriter, lengths: list[int]) -> None:
         bw.write(0, 1)
     for ln in seq:
         c, cl = clc_codes[ln]
-        bw.write(_reverse_bits(c, cl), cl)
+        bw.write_code(c, cl)
 
 
-def _reverse_bits(code: int, length: int) -> int:
-    """Prefix codes are read MSB-first by the decoder while the writer
-    packs LSB-first — emit the code bits in reading order."""
-    out = 0
-    for _ in range(length):
-        out = (out << 1) | (code & 1)
-        code >>= 1
-    return out
-
-
-def _emit_code(bw: BitWriter, codes, sym: int) -> None:
+def _emit_code(bw: LSBWriter, codes, sym: int) -> None:
     c, ln = codes[sym]
-    bw.write(_reverse_bits(c, ln), ln)
+    bw.write_code(c, ln)
 
 
 def _code_lengths(counts: dict[int, int], alphabet: int,
@@ -645,7 +585,7 @@ def _code_lengths(counts: dict[int, int], alphabet: int,
         lengths[s] = 1
         lengths[(s + 1) % alphabet] = 1  # dummy partner for a full code
         return lengths
-    for s, ln in _pm_lengths(counts, max_len).items():
+    for s, ln in package_merge_lengths(counts, max_len).items():
         lengths[s] = ln
     return lengths
 
@@ -714,7 +654,7 @@ def encode_vp8l(img: np.ndarray, use_subtract_green: bool = True,
         for r, g, b, a in arr.reshape(-1, 4)
     ]
 
-    bw = BitWriter()
+    bw = LSBWriter()
     bw.write(0x2F, 8)
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)
@@ -763,10 +703,10 @@ def encode_vp8l(img: np.ndarray, use_subtract_green: bool = True,
         bw.write(0, 1)
 
     _encode_image_body(bw, pixels, eff_w, cache_bits, use_lz77)
-    return bw.bytes()
+    return bw.getvalue()
 
 
-def _encode_subimage(bw: BitWriter, pixels: list[int], w: int,
+def _encode_subimage(bw: LSBWriter, pixels: list[int], w: int,
                      h: int) -> None:
     """Entropy-coded sub-image (palette / predictor image): no cache,
     no meta, literals only."""
@@ -775,7 +715,7 @@ def _encode_subimage(bw: BitWriter, pixels: list[int], w: int,
         bw, [("lit", p) for p in pixels], 0)
 
 
-def _encode_image_body(bw: BitWriter, pixels: list[int], w: int,
+def _encode_image_body(bw: LSBWriter, pixels: list[int], w: int,
                        cache_bits: int, use_lz77: bool) -> None:
     tokens = _lz77_tokens(pixels, w, cache_bits, use_lz77)
     if cache_bits:
@@ -787,7 +727,7 @@ def _encode_image_body(bw: BitWriter, pixels: list[int], w: int,
     _encode_groups_and_pixels(bw, tokens, cache_bits, w)
 
 
-def _encode_groups_and_pixels(bw: BitWriter, tokens: list[tuple],
+def _encode_groups_and_pixels(bw: LSBWriter, tokens: list[tuple],
                               cache_bits: int, w: int = 1) -> None:
     from collections import Counter
 
@@ -817,7 +757,7 @@ def _encode_groups_and_pixels(bw: BitWriter, tokens: list[tuple],
     dlen = _code_lengths(dict(dc), 40)
     for lengths in (glen, rlen, blen, alen, dlen):
         _write_prefix_code(bw, lengths)
-    gcod, rcod, bcod, acod, dcod = (_build_codes(x) for x in
+    gcod, rcod, bcod, acod, dcod = (canonical_codes(x) for x in
                                     (glen, rlen, blen, alen, dlen))
     for t in tokens:
         if t[0] == "lit":

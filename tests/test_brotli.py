@@ -17,8 +17,9 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from gfw_pixetl_spark.sources._bitio import LSBWriter
 from gfw_pixetl_spark.sources.brotli import (
-    _BitWriter, _static_data, compress_store, decode_content_encoding,
+    _static_data, compress_store, decode_content_encoding,
     decompress,
 )
 
@@ -133,7 +134,7 @@ def test_store_mode_rejects_bad_wbits():
 def _metadata_stream(meta: bytes) -> bytes:
     """A stream with one metadata meta-block (skipped), one
     2-byte uncompressed block, then the last-empty block."""
-    w = _BitWriter()
+    w = LSBWriter()
     w.write(1, 1)
     w.write(5, 3)                       # WBITS 22
     w.write(0, 1)                       # ISLAST = 0

@@ -31,7 +31,7 @@ def test_expgolomb_ue_roundtrip(vals):
     for v in vals:
         w.ue(v)
     w.rbsp_trailing()
-    r = h264.BitReader(w.tobytes())
+    r = h264.BitReader(w.getvalue())
     assert [r.ue() for _ in vals] == vals
 
 
@@ -42,7 +42,7 @@ def test_expgolomb_se_roundtrip(vals):
     for v in vals:
         w.se(v)
     w.rbsp_trailing()
-    r = h264.BitReader(w.tobytes())
+    r = h264.BitReader(w.getvalue())
     assert [r.se() for _ in vals] == vals
 
 

@@ -295,9 +295,9 @@ def test_huffman_literals_layer():
 @given(st.dictionaries(st.integers(0, 128), st.integers(1, 10000),
                        min_size=2, max_size=80))
 def test_property_package_merge_kraft(counts):
-    from gfw_pixetl_spark.sources.zstd import _pm_lengths
+    from gfw_pixetl_spark.sources._bitio import package_merge_lengths
 
-    lens = _pm_lengths(counts, 11)
+    lens = package_merge_lengths(counts, 11)
     assert max(lens.values()) <= 11
     assert sum(1 << (11 - l) for l in lens.values()) == 1 << 11
 
